@@ -5,14 +5,19 @@ Mirrors the reference's two Airflow tasks (``run_extract_pipeline``,
 ``transform.py:161-240``) as two driver functions over lazy DataFrame
 graphs. Control flow (watermarks, early exit) stays driver-side Python
 — exactly the "thin driver logic" SURVEY.md §4 keeps — while every data
-motion is a Spark plan: pruned raw-zone scans, one flatten projection,
-one multi-way outer join, one schema-align projection, one append.
+motion is a Spark plan: pruned raw-zone scans, one aggregation that
+combines the types on the day key and counts each type's records per
+day, one flatten + schema-align projection, one append.
 
 Scale notes (100 TB): per-type extraction is embarrassingly parallel
-(no state crosses types); the combine shares one hash-partitioning on
-the key across all N joins; the warehouse append is a columnar write
-whose schema is enforced *before* the job runs (C2 fails in the driver,
-not per-task). Nothing but scalar watermarks ever reaches the driver.
+(no state crosses types). The combine is a single shuffle on the day
+key however many types there are: a chain of N-1 full-outer joins
+plans N+1 exchanges, because each join's output is re-shuffled on the
+coalesced key. The transform runs two actions over that aggregation —
+a small check that fails on duplicate days before anything is written,
+then the append — whose schema is enforced *before* the job runs (C2
+fails in the driver, not per-task). Nothing but scalar watermarks and
+at most ``_CITED`` check rows ever reaches the driver.
 """
 
 from __future__ import annotations
@@ -20,14 +25,14 @@ from __future__ import annotations
 import datetime as dt
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from personal_health_etl_pipeline_spark.functions.flatten import flatten, prefix_columns
-from personal_health_etl_pipeline_spark.operators.combine import combine_on_key
-from personal_health_etl_pipeline_spark.operators.conflict import assert_unique_key
+from personal_health_etl_pipeline_spark.functions.flatten import flatten
+from personal_health_etl_pipeline_spark.operators.conflict import DuplicateKeyError
 from personal_health_etl_pipeline_spark.pipeline.fixtures import (
     RECORD_SCHEMA,
     fetch_range_df,
@@ -43,6 +48,7 @@ from personal_health_etl_pipeline_spark.schema import (
 )
 
 DEFAULT_TYPES = ("daily_activity", "daily_sleep", "daily_readiness")
+_CITED = 5  # duplicate days a DuplicateKeyError names
 
 
 @dataclass(frozen=True)
@@ -162,12 +168,19 @@ def run_transform(
     """Combine new raw days into wide rows and append to the warehouse.
 
     Per type: pruned raw scan (S6/P2) -> required-key filter (P1) ->
-    duplicate-day conflict check (J3, validate-then-act) -> flatten with
-    boundary JSON arrays (F1/F4) -> namespace prefix (P3). Then one
-    multi-way full-outer combine (J1), schema alignment (C1-C3/C5, which
-    also performs the F2/F3 string->date/timestamp coercions via typed
-    casts), and an append (S7). Late data — anything ≤ the warehouse
-    watermark — is never re-read (transform.py:187).
+    the record packed into one struct column named after the type. The
+    per-type frames are unioned and grouped by ``day`` once: each
+    type's collected list holds its record for the day (J1 — a type
+    missing the day gets NULLs) and, by its length, the type's
+    multiplicity (J3). A check action over that aggregation raises
+    :class:`DuplicateKeyError` before any write (validate-then-act) or
+    exits early when there is nothing new (transform.py:192-194). The
+    append then re-runs the aggregation, flattens each struct into
+    ``{type}__{field}`` columns with boundary JSON arrays (F1/F4, P3),
+    aligns to the declared schema (C1-C3/C5, which also performs the
+    F2/F3 string->date/timestamp coercions via typed casts) and writes
+    (S7). Late data — anything ≤ the warehouse watermark — is never
+    re-read (transform.py:187).
     """
     existing = _warehouse_df(spark, cfg)
     if existing is not None:
@@ -181,24 +194,39 @@ def run_transform(
     )
     end_excl = today  # through yesterday, half-open
 
+    types = cfg.data_types
     frames = []
-    for dtype in cfg.data_types:
+    for dtype in types:
         raw = scan_raw(spark, cfg.raw_root, dtype, start, end_excl, RECORD_SCHEMA)
         raw = raw.where(F.col("day").isNotNull())  # P1
-        assert_unique_key(raw, "day")  # J3: fail before any write
-        flat = flatten(raw, arrays="json")  # F1 + F4
-        frames.append(prefix_columns(flat, dtype, exclude=("day",)))
+        record = F.struct(*[c for c in raw.columns if c != "day"])
+        frames.append(raw.select("day", record.alias(dtype)))
+    by_day = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    ).groupBy("day").agg(*[F.collect_list(t).alias(t) for t in types])
 
-    combined = combine_on_key(frames, key="day")  # J1
-    if not combined.head(1):
+    copies = by_day.select("day", *[F.size(t).alias(t) for t in types])
+    most = F.array_max(F.array(*types))
+    check = copies.orderBy(most.desc(), "day").limit(_CITED).collect()
+    if not check:
         return {"new_rows": 0}  # early exit (transform.py:192-194)
+    dups = [r for r in check if max(r[t] for t in types) > 1]
+    if dups:  # J3: fail before any write
+        cited = ", ".join(
+            f"{r['day']!r}(" + ", ".join(f"{t} x{r[t]}" for t in types if r[t] > 1) + ")"
+            for r in dups
+        )
+        raise DuplicateKeyError(f"duplicate 'day' values detected: {cited}")
 
-    target = warehouse_schema(cfg.data_types)
-    aligned = align_to_schema(combined, target)  # C1-C3/C5 (+F2/F3 casts)
-    # The count rides along the write as an observed metric: the
-    # scan->flatten->combine->align lineage executes exactly once (a
-    # .count() after the write would re-run the whole DAG — at scale
-    # that doubles the most expensive job in the pipeline).
+    # by_day is deliberately not persisted: a cached aggregate keeps
+    # every shuffle partition uncoalesced, which costs more tasks than
+    # re-running a small aggregation for the write.
+    wide = flatten(
+        by_day.select("day", *[F.get(t, 0).alias(t) for t in types]), arrays="json"
+    )
+    aligned = align_to_schema(wide, warehouse_schema(types))
+    # The count rides along the write as an observed metric, not a
+    # second action over the lineage.
     obs = Observation()
     aligned.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
         "append"

@@ -17,7 +17,9 @@ from __future__ import annotations
 import datetime as dt
 import hashlib
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -88,8 +90,16 @@ def fetch_range(data_type: str, start: dt.date, end: dt.date) -> list[dict]:
 def fetch_range_df(
     spark: SparkSession, data_type: str, start: dt.date, end: dt.date
 ) -> DataFrame:
-    """The fixture source as a typed DataFrame (what S1-S3 hand on)."""
-    return spark.createDataFrame(fetch_range(data_type, start, end), RECORD_SCHEMA)
+    """The fixture source as a typed DataFrame (what S1-S3 hand on).
+
+    Built from an Arrow table, so the plan is a ``LocalTableScan`` that
+    lives in the JVM: a frame built from Python rows would re-pickle
+    them through Python workers in every action that reads it.
+    """
+    records = pa.Table.from_pylist(
+        fetch_range(data_type, start, end), schema=to_arrow_schema(RECORD_SCHEMA)
+    )
+    return spark.createDataFrame(records, RECORD_SCHEMA)
 
 
 # --- FULL-WIDTH daily fixtures: every field of every DAILY type -------

@@ -680,7 +680,7 @@ DQ7_ORACLE = _benford_oracle()
 def dq8_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``DataFrame.observe`` (CollectMetrics): data-quality counters
     computed as a SIDE EFFECT of a production write, the way
-    ``pipeline/etl.py:136`` rides its landed-row count on the raw-zone
+    ``pipeline/etl.py:run_extract`` rides its landed-row count on the raw-zone
     sink. The clean-rows job (drop ``error`` events) runs ONCE — to a
     ``noop`` sink here, standing in for the warehouse append — and the
     observation collects row count, cents total, event-id span and a

@@ -153,11 +153,15 @@ def write_ledger(
     """(Re)pin the ledger. A full walk REPLACES it; a subset walk
     (``--only``) MERGES into the existing file so the other entries'
     pins survive — the subset must never silently truncate the
-    268-entry ledger (VERDICT-r15 item 9)."""
+    268-entry ledger (VERDICT-r15 item 9). With no ledger on disk yet,
+    a subset walk starts from empty entries."""
     entries = current
     if only:
-        with open(path) as f:
-            entries = json.load(f)["entries"]
+        try:
+            with open(path) as f:
+                entries = json.load(f)["entries"]
+        except FileNotFoundError:
+            entries = {}
         entries.update(current)
         print(f"merging {len(current)} re-pinned entries into ledger")
     with open(path, "w") as f:

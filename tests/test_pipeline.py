@@ -9,6 +9,9 @@ raw ranges failure, idempotence (running twice loads nothing new).
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,7 +30,10 @@ from personal_health_etl_pipeline_spark.pipeline import (
     warehouse_has_day,
     write_raw,
 )
-from personal_health_etl_pipeline_spark.pipeline.etl import warehouse_schema
+from personal_health_etl_pipeline_spark.pipeline.etl import (
+    truncate_warehouse,
+    warehouse_schema,
+)
 from personal_health_etl_pipeline_spark.pipeline.fixtures import (
     RECORD_SCHEMA,
     fetch_range,
@@ -100,6 +106,37 @@ class TestRawZone:
         with pytest.raises(OverlappingRangeError):
             landed_ranges(root, "daily_sleep")
 
+    @pytest.mark.parametrize(
+        "start, end",
+        [
+            (dt.date(2024, 1, 1), dt.date(2024, 12, 31)),  # 366 days
+            (dt.date(2024, 1, 1), dt.date(2024, 1, 1)),
+            (dt.date(2024, 1, 2), dt.date(2024, 1, 1)),  # inverted: empty
+        ],
+        ids=["366d", "1d", "inverted"],
+    )
+    def test_source_lands_like_row_path(self, spark, tmp_path, start, end):
+        """The Arrow-backed fixture frame equals the Python-row frame in
+        schema, rows and landed JSON lines; an empty extraction still
+        lands a processed marker."""
+        got = fetch_range_df(spark, "daily_sleep", start, end)
+        want = spark.createDataFrame(fetch_range("daily_sleep", start, end), RECORD_SCHEMA)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+
+        lines = {}
+        for name, df in (("arrow", got), ("rows", want)):
+            root = str(tmp_path / name)
+            path = write_raw(df, root, "daily_sleep", start, end)
+            assert max_landed_date(root, "daily_sleep") == end
+            lines[name] = sorted(
+                line
+                for f in glob.glob(f"{path}/*.json")
+                for line in Path(f).read_text().splitlines()
+            )
+        assert lines["arrow"] == lines["rows"]
+        assert len(lines["arrow"]) == max((end - start).days + 1, 0)
+
     def test_empty_extraction_is_processed_marker(self, spark, tmp_path):
         root = str(tmp_path / "raw")
         empty = spark.createDataFrame([], RECORD_SCHEMA)
@@ -111,6 +148,12 @@ class TestRawZone:
             spark, root, "daily_sleep", dt.date(2024, 1, 1), dt.date(2024, 2, 1), RECORD_SCHEMA
         )
         assert got.count() == 0
+
+    def test_source_plan_runs_no_python_workers(self, spark):
+        df = fetch_range_df(spark, "daily_sleep", dt.date(2024, 1, 1), dt.date(2024, 1, 7))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan
+        assert "ExistingRDD" not in plan  # a Python-RDD scan
 
 
 class TestTransformLoad:
@@ -173,12 +216,42 @@ class TestTransformLoad:
                 dup_day,
                 dup_day,
             )
-        with pytest.raises(DuplicateKeyError):
+        # daily_sleep is not the first type: every type's multiplicity
+        # is checked, and the error cites the day
+        assert cfg.data_types.index("daily_sleep") > 0
+        with pytest.raises(DuplicateKeyError, match=r"'2024-02-25'\(daily_sleep x2\)"):
             run_transform(spark, cfg, TODAY)
         # validate-then-act: nothing was written
-        import os
-
         assert not os.path.isdir(cfg.warehouse_path)
+
+    def test_day_missing_from_one_type_is_null_there(self, spark, tmp_path):
+        cfg = _cfg(tmp_path)
+        lo, hi = dt.date(2024, 2, 20), dt.date(2024, 2, 22)
+        for dtype in cfg.data_types:
+            end = hi - dt.timedelta(1) if dtype == "daily_sleep" else hi
+            write_raw(fetch_range_df(spark, dtype, lo, end), cfg.raw_root, dtype, lo, end)
+        assert run_transform(spark, cfg, TODAY) == {"new_rows": 3}
+        rows = {r["day"]: r for r in spark.read.parquet(cfg.warehouse_path).collect()}
+        sleep_cols = [c for c in rows[hi].asDict() if c.startswith("daily_sleep__")]
+        assert len(sleep_cols) == 8
+        assert all(rows[hi][c] is None for c in sleep_cols)
+        assert rows[hi]["daily_activity__score"] == fetch_range("daily_activity", hi, hi)[0]["score"]
+        assert rows[lo]["daily_sleep__score"] == fetch_range("daily_sleep", lo, lo)[0]["score"]
+
+    def test_truncate_then_transform_reloads_every_raw_day(self, spark, tmp_path):
+        """S8: the warehouse exists but holds zero rows, so the
+        transform has no watermark and reloads the whole raw zone."""
+        cfg = _cfg(tmp_path)
+        run_pipeline(spark, cfg, TODAY)
+        truncate_warehouse(spark, cfg)
+        wh = spark.read.parquet(cfg.warehouse_path)
+        assert wh.collect() == []
+        assert [(f.name, f.dataType) for f in wh.schema.fields] == [
+            (f.name, f.dataType) for f in warehouse_schema(cfg.data_types).fields
+        ]
+        assert run_transform(spark, cfg, TODAY) == {"new_rows": 10}
+        days = {r["day"] for r in spark.read.parquet(cfg.warehouse_path).collect()}
+        assert days == {TODAY - dt.timedelta(days=i) for i in range(1, 11)}
 
 
 class TestProbes:
@@ -216,6 +289,24 @@ class TestSingleExecution:
             "daily_activity": 10,
             "daily_readiness": 10,
         }
+
+
+class TestJobsPerDay:
+    def test_incremental_day_runs_at_most_11_jobs(self, spark, tmp_path):
+        """One incremental day: 3 raw writes, the warehouse footer read
+        and watermark, then the combine's check and its append."""
+        cfg = _cfg(tmp_path)
+        run_pipeline(spark, cfg, TODAY)
+        sc = spark.sparkContext
+        group = f"incremental-day-{tmp_path.name}"
+        sc.setJobGroup(group, "one incremental run_pipeline day")
+        try:
+            out = run_pipeline(spark, cfg, TODAY + dt.timedelta(days=1))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert out["new_rows"] == 1
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 11
 
 
 class TestSpecialCategorySlice:

@@ -184,6 +184,15 @@ class TestWriteLedger:
         assert on_disk["n_entries"] == 3
         assert set(on_disk["entries"]) == {"a", "b", "c"}
 
+    def test_first_subset_write_starts_empty(self, tmp_path):
+        from scripts.plan_budget import write_ledger
+
+        path = str(tmp_path / "ledger.json")
+        out = write_ledger(path, {"b": _counts()}, only=True, sf_dir="sf")
+        assert out == {"b": _counts()}
+        with open(path) as f:
+            assert json.load(f)["entries"] == {"b": _counts()}
+
     def test_full_write_replaces(self, tmp_path):
         from scripts.plan_budget import write_ledger
 
